@@ -43,7 +43,6 @@ def cdlp(
     checkpoint_every: int = 5,
     resume: bool = True,
     return_result: bool = False,
-    mode: str = "dataframe",
 ) -> DataFrame | SuperstepResult:
     """Returns ``(id, label)`` after ``max_iter`` synchronous rounds (or
     earlier if labels stabilize — same result, fewer jobs)."""
@@ -59,26 +58,14 @@ def cdlp(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    blocks = None
-    if mode == "csr":
-        from graphscope_spark.engine.csr import build_csr_blocks, csr_label_counts
-
-        # multiplicity matters for CDLP: pack the multi-edge table as-is
-        import pyspark.sql.functions as _F
-
-        blocks = build_csr_blocks(edges.withColumn("share", _F.lit(0.0)), P)
-
     def init() -> DataFrame:
         return graph.vertices.select("id", F.col("id").alias("label")).repartition(
             P, "id"
         )
 
     def body(state: DataFrame, rnd: int) -> tuple[DataFrame, dict]:
-        if mode == "csr":
-            freq = csr_label_counts(blocks, state.select("id", "label"), P)
-        else:
-            msgs = edges.join(state.hint("shuffle_hash"), edges.src == state.id).select("dst", "label")
-            freq = msgs.groupBy("dst", "label").agg(F.count(F.lit(1)).alias("cnt"))
+        msgs = edges.join(state.hint("shuffle_hash"), edges.src == state.id).select("dst", "label")
+        freq = msgs.groupBy("dst", "label").agg(F.count(F.lit(1)).alias("cnt"))
         # smallest label among most frequent: max over (cnt, -label)
         best = freq.groupBy("dst").agg(
             F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("top")
@@ -106,8 +93,6 @@ def cdlp(
         )
     finally:
         edges.unpersist()
-        if blocks is not None:
-            blocks.unpersist()
     if return_result:
         return res
     return res.state.select("id", "label")

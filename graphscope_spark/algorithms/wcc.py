@@ -43,21 +43,18 @@ def wcc(
 ) -> DataFrame | SuperstepResult:
     """Returns ``(id, component)`` — component = min vertex id reachable.
 
-    ``mode="csr"`` runs the gather as the partition-local CSR kernel
-    (engine/csr.csr_label_messages) instead of the relational join;
-    ``mode="logstar"`` adds pointer jumping (O(log n) rounds, cc-log.h).
-    ``warm_start`` seeds iteration from a prior state ``(id, label,
-    changed)`` instead of the identity labeling — the Ingress
+    ``mode="dataframe"`` is the frontier join; ``mode="logstar"`` adds
+    pointer jumping (O(log n) rounds, cc-log.h). Any other mode raises
+    ``ValueError``. ``warm_start`` seeds iteration from a prior state
+    ``(id, label, changed)`` instead of the identity labeling — the Ingress
     delta-recompute entry (engine/ingress.wcc_delta)."""
+    if mode not in ("dataframe", "logstar"):
+        raise ValueError(
+            f"wcc: unknown mode {mode!r}; expected 'dataframe' or 'logstar'"
+        )
     P = graph.num_partitions
     und = graph.to_undirected(dedup=True)
     edges = und.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-
-    blocks = None
-    if mode == "csr":
-        from graphscope_spark.engine.csr import build_csr_blocks, csr_label_messages
-
-        blocks = build_csr_blocks(edges.withColumn("share", F.lit(0.0)), P)
 
     def init() -> DataFrame:
         if warm_start is not None:
@@ -113,19 +110,14 @@ def wcc(
     def body(state: DataFrame, rnd: int) -> tuple[DataFrame, dict]:
         if mode == "logstar":
             return body_logstar(state, rnd)
-        if mode == "csr":
-            msgs = csr_label_messages(
-                blocks, state.select("id", "label", "changed"), P, combine="min"
-            )
-        else:
-            frontier = state.filter("changed").select("id", "label")
-            # shuffle_hash (guide §3.1): without it Catalyst sort-merges,
-            # re-sorting the persisted edge table every round.
-            msgs = (
-                edges.join(frontier.hint("shuffle_hash"), edges.src == frontier.id)
-                .groupBy("dst")
-                .agg(F.min("label").alias("cand"))
-            )
+        frontier = state.filter("changed").select("id", "label")
+        # shuffle_hash (guide §3.1): without it Catalyst sort-merges,
+        # re-sorting the persisted edge table every round.
+        msgs = (
+            edges.join(frontier.hint("shuffle_hash"), edges.src == frontier.id)
+            .groupBy("dst")
+            .agg(F.min("label").alias("cand"))
+        )
         new_label = F.when(
             F.col("cand").isNotNull() & (F.col("cand") < F.col("label")),
             F.col("cand"),
@@ -158,8 +150,6 @@ def wcc(
     finally:
         edges.unpersist()
         und.unpersist()
-        if blocks is not None:
-            blocks.unpersist()
     if not res.converged:
         import warnings
 

@@ -15,15 +15,16 @@ does not do for you (SURVEY.md §4.1):
 
 * **lineage truncation** — every iteration adds plan nodes; without
   truncation analysis/optimization time grows with the round number (measured
-  locally: 1s → 27s/round by round 6). We ``localCheckpoint`` (or
-  durable-checkpoint) every ``truncate_every`` rounds; the default of 1 keeps
-  per-round time flat (~0.5s fixed overhead locally) at the cost of one extra
-  block write per round — at cluster scale the write is local to executors
-  and amortized against shuffle volume.
+  locally: 1s → 27s/round by round 6). Each round's plan is materialized
+  once with ``localCheckpoint``, which keeps per-round time flat (~0.5s
+  fixed overhead locally) at the cost of one block write per round — at
+  cluster scale the write is local to executors and amortized against
+  shuffle volume.
 * **durable checkpointing** — state + metrics committed to an Iceberg-layout
   table (engine/checkpoint.py) every ``checkpoint_every`` rounds so a run
   resumes mid-iteration.
-* **persist/unpersist discipline** — exactly one persisted state at a time.
+* **one live state** — each round's checkpointed state replaces the last;
+  Spark's ContextCleaner frees the old blocks.
 """
 
 from __future__ import annotations
@@ -41,10 +42,9 @@ from graphscope_spark.engine.checkpoint import CheckpointManager
 __all__ = ["SuperstepResult", "run_supersteps"]
 
 # body(state, round_no) -> (next_state_plan, finalize) where
-# finalize(materialized_state) -> metrics (preferred: one materialization per
-# round), or (persisted_state, metrics) (legacy). Metrics must contain
+# finalize(materialized_state) -> metrics. Metrics must contain
 # "converged": bool; anything else (eps, active counts) is recorded.
-Body = Callable[[DataFrame, int], tuple[DataFrame, Any]]
+Body = Callable[[DataFrame, int], tuple[DataFrame, Callable[[DataFrame], dict]]]
 
 
 @dataclass
@@ -67,9 +67,7 @@ def run_supersteps(
     max_rounds: int,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
-    truncate_every: int = 1,
     resume: bool = True,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> SuperstepResult:
     """Run ``init`` (PEval) then ``body`` (IncEval) to convergence.
 
@@ -78,29 +76,29 @@ def run_supersteps(
     north-rule mid-iteration resume path.
     """
     ckpt = None
-    start_round = 0
+    rnd = 0
     history: list[dict[str, Any]] = []
     resumed_from = None
     state: DataFrame
+    spark = _spark_of(init)
 
     if checkpoint_dir:
         # init() may lazily build inputs the resumed state still needs
         # (degree caches etc.) — callers capture those in closures instead.
-        ckpt = CheckpointManager(checkpoint_dir, _spark_of(init))
+        ckpt = CheckpointManager(checkpoint_dir, spark)
         loaded = ckpt.load() if resume else None
         if loaded is not None:
-            start_round, state, last_metrics = loaded
-            resumed_from = start_round
-            history.append({"round": start_round, "resumed": True, **last_metrics})
+            rnd, state, last_metrics = loaded
+            resumed_from = rnd
+            history.append({"round": rnd, "resumed": True, **last_metrics})
             if last_metrics.get("converged"):
-                state = state.persist(storage_level)
-                return SuperstepResult(state, start_round, True, history, resumed_from)
+                state = state.persist(StorageLevel.MEMORY_AND_DISK)
+                return SuperstepResult(state, rnd, True, history, resumed_from)
         else:
             state = init()
     else:
         state = init()
 
-    spark = _spark_of(init)
     # AQE re-plans every tiny per-round query; for iteration loops the static
     # plan (with our co-partitioning + shuffle_hash hints) is already right,
     # and skipping replanning measures ~20% faster per round. Restored after.
@@ -108,19 +106,8 @@ def run_supersteps(
     sp_before = spark.conf.get("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        return _loop(state, body, start_round, max_rounds, ckpt,
-                     checkpoint_every, truncate_every, storage_level,
-                     history, resumed_from, spark)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", sp_before)
+        state = state.localCheckpoint(eager=True)  # materialize PEval + truncate
 
-
-def _loop(state, body, start_round, max_rounds, ckpt, checkpoint_every,
-          truncate_every, storage_level, history, resumed_from, spark=None):
-    state = state.localCheckpoint(eager=True)  # materialize PEval + truncate
-
-    if spark is not None:
         # Pin per-round exchanges to the state's own partition count (the
         # graph's scale-adaptive P, established by init's repartition) —
         # with AQE off inside the loop, every groupBy/join would otherwise
@@ -134,52 +121,29 @@ def _loop(state, body, start_round, max_rounds, ckpt, checkpoint_every,
         except Exception:  # noqa: BLE001 — tuning must never kill the loop
             pass
 
-    converged = False
-    rnd = start_round
-    while rnd < max_rounds and not converged:
-        rnd += 1
-        t0 = time.time()
-        out = body(state, rnd)
-        plan, second = out
-
-        if callable(second):
-            # plan+finalize protocol: ONE materialization per round
-            # (localCheckpoint = compute + block write + lineage truncation),
-            # then the driver all-reduce runs over the materialized blocks.
+        converged = False
+        while rnd < max_rounds and not converged:
+            rnd += 1
+            t0 = time.time()
+            plan, finalize = body(state, rnd)
+            # ONE materialization per round (localCheckpoint = compute +
+            # block write + lineage truncation), then the driver all-reduce
+            # runs over the materialized blocks.
             new_state = plan.localCheckpoint(eager=True)
-            metrics = second(new_state)
+            metrics = finalize(new_state)
             if ckpt is not None and (
                 rnd % checkpoint_every == 0 or metrics.get("converged")
             ):
                 ckpt.commit(new_state, rnd, metrics)
-        else:
-            # legacy protocol: body persisted+materialized the state itself
-            metrics = second
-            new_state = plan.persist(storage_level)
-            do_ckpt = ckpt is not None and (
-                rnd % checkpoint_every == 0 or metrics.get("converged")
-            )
-            if do_ckpt:
-                ckpt.commit(new_state, rnd, metrics)
-                # Re-read: truncates lineage AND makes the in-memory state
-                # byte-identical to what a resume would load.
-                new_state.unpersist()
-                new_state = ckpt.load(rnd)[1].persist(storage_level)
-                new_state.count()
-            elif rnd % truncate_every == 0:
-                truncated = new_state.localCheckpoint(eager=True)
-                new_state.unpersist()
-                new_state = truncated
-            else:
-                new_state.count()  # materialize before dropping the parent
-            state.unpersist()
-
-        # old localCheckpoint blocks are released by the ContextCleaner once
-        # the previous DataFrame reference drops
-        state = new_state
-        metrics = {"round": rnd, "sec": time.time() - t0, **metrics}
-        history.append(metrics)
-        converged = bool(metrics.get("converged"))
+            # old localCheckpoint blocks are released by the ContextCleaner
+            # once the previous DataFrame reference drops
+            state = new_state
+            metrics = {"round": rnd, "sec": time.time() - t0, **metrics}
+            history.append(metrics)
+            converged = bool(metrics.get("converged"))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+        spark.conf.set("spark.sql.shuffle.partitions", sp_before)
 
     return SuperstepResult(state, rnd, converged, history, resumed_from)
 

@@ -12,11 +12,6 @@ estimated plan bytes: ~``SPARK_GRAFT_PARTITION_TARGET_BYTES`` (default
 configured cluster-scale count (``spark.sql.shuffle.partitions``), so at
 scale the estimate exceeds ``default × target`` and behaviour is unchanged;
 only provably-small inputs shrink. Unknown estimates keep ``default``.
-
-``loop_shuffle_partitions`` pins ``spark.sql.shuffle.partitions`` to the
-loop's state partition count for the duration of an iterative driver loop,
-so per-round exchanges produce as many partitions as the data needs rather
-than the session-wide constant.
 """
 
 from __future__ import annotations
@@ -30,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = [
     "adaptive_partitions",
     "iterative_loop",
-    "loop_shuffle_partitions",
     "plan_size_bytes",
     "tuned_loop",
 ]
@@ -71,18 +65,6 @@ def adaptive_partitions(df: DataFrame, default: int) -> int:
     if est is None:
         return int(default)
     return max(floor, min(int(default), math.ceil(est / TARGET_BYTES)))
-
-
-@contextmanager
-def loop_shuffle_partitions(spark: SparkSession, p: int):
-    """Pin spark.sql.shuffle.partitions to ``p`` inside an iterative loop;
-    restores the session value afterwards."""
-    before = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(p)))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def tuned_loop(fn):

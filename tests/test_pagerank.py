@@ -7,11 +7,11 @@ from tests.conftest import ALL_FIXTURES, make_graph, p2p_mid
 from tests.oracles import pagerank_oracle
 
 
-def _check(spark, vertices, edges, mode="dataframe", **kw):
+def _check(spark, vertices, edges, **kw):
     from graphscope_spark.algorithms.pagerank import pagerank
 
     g = make_graph(spark, edges, vertices)
-    got = {r["id"]: r["pagerank"] for r in pagerank(g, mode=mode, **kw).collect()}
+    got = {r["id"]: r["pagerank"] for r in pagerank(g, **kw).collect()}
     want = pagerank_oracle(vertices, edges, **{k: kw[k] for k in ("alpha", "tol", "max_iter") if k in kw})
     assert set(got) == set(want)
     ids = sorted(want)
@@ -33,20 +33,22 @@ def test_pagerank_p2p_mid(spark):
     _check(spark, vertices, edges)
 
 
-def test_pagerank_csr_mode(spark):
-    vertices, edges = p2p_mid(n=120, m=900)
-    _check(spark, vertices, edges, mode="csr")
-
-
-def test_pagerank_ldbc_fixed_rounds(spark):
+@pytest.mark.parametrize(
+    "graph, rounds",
+    [
+        pytest.param(ALL_FIXTURES["dangling_chain"], 7, id="dangling_chain"),
+        pytest.param(p2p_mid(n=200, m=1500), 10, id="p2p_mid"),
+    ],
+)
+def test_pagerank_ldbc_fixed_rounds(spark, graph, rounds):
     from graphscope_spark.algorithms.pagerank import pagerank_ldbc
 
-    vertices, edges = ALL_FIXTURES["dangling_chain"]
+    vertices, edges = graph
     g = make_graph(spark, edges, vertices)
-    got = {r["id"]: r["pagerank"] for r in pagerank_ldbc(g, rounds=7).collect()}
-    want = pagerank_oracle(vertices, edges, fixed_rounds=7)
+    got = {r["id"]: r["pagerank"] for r in pagerank_ldbc(g, rounds=rounds).collect()}
+    want = pagerank_oracle(vertices, edges, fixed_rounds=rounds)
     ids = sorted(want)
-    np.testing.assert_allclose([got[i] for i in ids], [want[i] for i in ids], atol=1e-9)
+    np.testing.assert_allclose([got[i] for i in ids], [want[i] for i in ids], atol=1e-12)
     g.unpersist()
 
 

@@ -21,13 +21,14 @@ def test_wcc_fixtures(spark, name):
     g.unpersist()
 
 
-def test_wcc_csr_mode(spark):
+@pytest.mark.parametrize("mode", ["csr", "bogus"])
+def test_wcc_rejects_unknown_mode(spark, mode):
     from graphscope_spark.algorithms.wcc import wcc
 
-    vertices, edges = p2p_mid(n=200, m=300)
+    vertices, edges = ALL_FIXTURES["diamond"]
     g = make_graph(spark, edges, vertices)
-    got = _collect_map(wcc(g, mode="csr"), "component")
-    assert got == wcc_oracle(vertices, edges)
+    with pytest.raises(ValueError, match="'dataframe' or 'logstar'"):
+        wcc(g, mode=mode)
     g.unpersist()
 
 
@@ -131,13 +132,12 @@ def test_lcc_and_global_metrics(spark):
     g.unpersist()
 
 
-def test_cdlp_csr_mode(spark):
+def test_cdlp_p2p_mid_five_rounds(spark):
     from graphscope_spark.algorithms.cdlp import cdlp
 
     vertices, edges = p2p_mid(n=150, m=600)
     g = make_graph(spark, edges, vertices)
-    got = _collect_map(cdlp(g, max_iter=5, mode="csr"), "label")
-    assert got == _collect_map(cdlp(g, max_iter=5), "label")
+    got = _collect_map(cdlp(g, max_iter=5), "label")
     assert got == cdlp_oracle(vertices, edges, rounds=5)
     g.unpersist()
 
