@@ -1662,7 +1662,7 @@ def _q_embedding_topk(spark, sf_dir, k: int = 5, n_queries: int = 5):
     from graphscope_spark.operators.similarity import brute_force_topk
 
     q = emb.filter(F.col("vec_id") < n_queries)
-    return brute_force_topk(q, emb, k=k, dim=64).orderBy("query_id", "rank")
+    return brute_force_topk(q, emb, k=k).orderBy("query_id", "rank")
 
 
 def _q_ngram_jaccard(spark, sf_dir):

@@ -83,7 +83,6 @@ class Graph:
         self._num_edges: int | None = None
         self._out_degrees: DataFrame | None = None
         self._in_degrees: DataFrame | None = None
-        self._undirected: Graph | None = None
 
     # -- bookkeeping ------------------------------------------------------
 
@@ -96,8 +95,6 @@ class Graph:
         for df in self._persisted:
             df.unpersist()
         self._persisted.clear()
-        if self._undirected is not None:
-            self._undirected.unpersist()
 
     # -- stats ------------------------------------------------------------
 

@@ -37,12 +37,11 @@ def _as_double(col):
 
 def with_cosine(
     df: DataFrame, a: str, b: str, out: str = "sim",
-    ndigits: int | None = 5, dim: int | None = None,
+    ndigits: int | None = 5,
 ) -> DataFrame:
-    """cosine(a, b) in float64: dot / sqrt(|a|²·|b|²). (``dim`` is accepted
-    for API stability; the dots are higher-order-function folds either way —
-    a fully unrolled variant was measured OOM-prone under codegen and 3x
-    slower interpreted.)"""
+    """cosine(a, b) in float64: dot / sqrt(|a|²·|b|²). The dots are
+    higher-order-function folds: a fully unrolled variant was measured
+    OOM-prone under codegen and 3x slower interpreted."""
     ca, cb = _as_double(a), _as_double(b)
     sim = _dot(ca, cb) / F.sqrt(_dot(ca, ca) * _dot(cb, cb))
     if ndigits is not None:
@@ -56,7 +55,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k: ``(query_id, neighbor_id, sim, rank)``.
 
@@ -72,7 +70,7 @@ def brute_force_topk(
     pairs = F.broadcast(q).crossJoin(c).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    sims = with_cosine(pairs, "_qv", "_cv", "sim", dim=dim)
+    sims = with_cosine(pairs, "_qv", "_cv", "sim")
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
     )
@@ -236,7 +234,7 @@ def lsh_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    sims = with_cosine(cand, "_qv", "_cv", "sim", dim=dim)
+    sims = with_cosine(cand, "_qv", "_cv", "sim")
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
     )
@@ -273,7 +271,7 @@ def cosine_neardup_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    sims = with_cosine(cand, "_va", "_vb", "sim", dim=dim)
+    sims = with_cosine(cand, "_va", "_vb", "sim")
     return sims.filter(F.col("sim") >= threshold).select("id_a", "id_b", "sim")
 
 

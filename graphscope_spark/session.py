@@ -53,6 +53,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # 100 entries recompile ~540 classes per greedy_loops pass; 2048: 264 once, then 0.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

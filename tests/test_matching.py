@@ -161,3 +161,35 @@ def test_min_edge_cover(spark):
         assert pt in adj[v]
         covered |= {v, pt}
     assert all(v in covered for v in verts if deg[v] > 0)
+
+
+def test_min_dominating_set_dominates_and_is_stable(spark):
+    """Every vertex is in the set or next to it; the set repeats across runs
+    and across fragment counts."""
+    from graphscope_spark.algorithms.matching import min_dominating_set
+
+    vertices, edges = p2p_mid(n=100, m=300, seed=11)
+    adj = _und(edges)
+    sets = {}
+    for p in (8, 1):
+        g = make_graph(spark, edges, vertices, num_partitions=p)
+        sets[p] = {r["id"] for r in min_dominating_set(g).collect()}
+        if p == 8:
+            assert {r["id"] for r in min_dominating_set(g).collect()} == sets[8]
+        g.unpersist()
+    ds = sets[8]
+    for v in vertices:
+        assert v in ds or adj[v] & ds, v
+    assert sets[1] == ds
+
+
+def test_maximal_matching_partition_invariant(spark):
+    from graphscope_spark.algorithms.matching import maximal_matching
+
+    vertices, edges = p2p_mid(n=100, m=420, seed=8)
+    got = {}
+    for p in (8, 1):
+        g = make_graph(spark, edges, vertices, num_partitions=p)
+        got[p] = {(r["src"], r["dst"]) for r in maximal_matching(g).collect()}
+        g.unpersist()
+    assert got[1] == got[8]
