@@ -10,16 +10,31 @@ rounds with high probability; each round is one shuffle.
 Priorities come from the engine-portable md5 hash (operators/dedup.
 portable_str_hash) so the whole iteration has an exact DuckDB twin — the
 driver oracle replays the same rounds bit-for-bit.
+
+Every loop here runs many small rounds, so it pays per-round overhead
+(jobs and plan building), not data; each round's plan is kept small:
+
+* every join against a per-round side is ``hint("shuffle_hash")``-ed
+  (:func:`_small`): a broadcast would cost a driver collect and a ship
+  per join per round;
+* an intermediate used twice in a round is a ``localCheckpoint`` leaf,
+  and a filter that a later join on the same key repeats is left out;
+* the loop test is the active row count observed on the round's own
+  checkpoint (:func:`~graphscope_spark.engine.tuning.materialize`), never
+  a separate ``isEmpty()`` probe;
+* per-round results are kept in a list and unioned once at the end.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph.graph import Graph
-from graphscope_spark.engine.tuning import tuned_loop
+from graphscope_spark.engine.tuning import materialize, tuned_loop
 
 __all__ = [
     "maximal_independent_set",
@@ -30,14 +45,27 @@ __all__ = [
 ]
 
 
-def _check_maximal(active: DataFrame, what: str, max_rounds: int) -> None:
+def _check_maximal(rows: int, what: str, max_rounds: int) -> None:
     """ADVICE r2: a '*maximal*' contract must fail loudly, not silently
-    return a partial result, when the round budget is exhausted."""
-    if not active.isEmpty():
+    return a partial result, when the round budget is exhausted. ``rows``
+    is the active row count of the last round's checkpoint."""
+    if rows:
         raise RuntimeError(
             f"{what}: {max_rounds} rounds exhausted with active elements "
             "remaining — result would not be maximal; raise max_rounds"
         )
+
+
+def _small(df: DataFrame) -> DataFrame:
+    """A join's per-round side: shuffled on the key and hashed, never
+    broadcast, whatever the session's broadcast threshold says."""
+    return df.hint("shuffle_hash")
+
+
+def _union_rounds(graph: Graph, parts: list[DataFrame], schema: str) -> DataFrame:
+    if not parts:
+        return graph.spark.createDataFrame([], schema)
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _prio(expr, rnd: int):
@@ -49,25 +77,33 @@ def _prio(expr, rnd: int):
 @tuned_loop
 def maximal_independent_set(graph: Graph, max_rounds: int = 64) -> DataFrame:
     """(id) — a maximal independent set of the undirected simple graph;
-    deterministic (hash priorities, min-(prio, id) wins)."""
+    deterministic (hash priorities, min-(prio, id) wins).
+
+    Two barriers per round: the winners, and the active set, which carries
+    the next round's priorities so each is hashed once per vertex."""
     und = graph.to_undirected(dedup=True)
     edges = und.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    active = graph.vertices.select("id").localCheckpoint(eager=True)
-    mis = None
+
+    def with_prio(ids: DataFrame, rnd: int) -> DataFrame:
+        return ids.select("id", _prio(F.col("id"), rnd).alias("p"))
+
+    active, rows = materialize(with_prio(graph.vertices.select("id"), 1))
+    winners_per_round: list[DataFrame] = []
     for rnd in range(1, max_rounds + 1):
-        if active.isEmpty():
+        if not rows:
             break
-        pa = active.select("id", _prio(F.col("id"), rnd).alias("p"))
-        # neighbor minimum over ACTIVE neighbors only
-        ae = (
-            edges.join(pa.withColumnRenamed("id", "src").withColumnRenamed("p", "ps"), "src")
-            .join(pa.select(F.col("id").alias("dst"), F.col("p").alias("pd")), "dst")
-        )
-        nbr_min = ae.groupBy(F.col("src").alias("id")).agg(
-            F.min(F.struct("pd", "dst")).alias("nm")
+        # neighbor minimum over ACTIVE neighbors; the left join below keeps
+        # active ids only, so the edges need no filter on src
+        nbr_min = (
+            edges.join(
+                _small(active.select(F.col("id").alias("dst"), F.col("p").alias("pd"))),
+                "dst",
+            )
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.min(F.struct("pd", "dst")).alias("nm"))
         )
         winners = (
-            pa.join(nbr_min, "id", "left")
+            active.join(_small(nbr_min), "id", "left")
             .filter(
                 F.col("nm").isNull()
                 | (F.struct(F.col("p"), F.col("id")) < F.struct(
@@ -76,83 +112,72 @@ def maximal_independent_set(graph: Graph, max_rounds: int = 64) -> DataFrame:
             .select("id")
             .localCheckpoint(eager=True)
         )
-        mis = winners if mis is None else mis.unionByName(winners)
-        mis = mis.localCheckpoint(eager=True)
+        winners_per_round.append(winners)
         dropped = (
-            edges.join(winners.withColumnRenamed("id", "src"), "src", "left_semi")
+            edges.join(_small(winners.withColumnRenamed("id", "src")), "src", "left_semi")
             .select(F.col("dst").alias("id"))
-            .distinct()
             .unionByName(winners)
         )
-        active = active.join(dropped, "id", "left_anti").localCheckpoint(eager=True)
-    _check_maximal(active, "maximal_independent_set", max_rounds)
+        active, rows = materialize(
+            with_prio(active.join(_small(dropped), "id", "left_anti"), rnd + 1)
+        )
+    _check_maximal(rows, "maximal_independent_set", max_rounds)
     edges.unpersist()
     und.unpersist()
-    if mis is None:
-        mis = graph.spark.createDataFrame([], "id long")
-    return mis
+    return _union_rounds(graph, winners_per_round, "id long")
 
 
 @tuned_loop
 def maximal_matching(graph: Graph, max_rounds: int = 64) -> DataFrame:
     """(src, dst) — a maximal matching (src < dst) of the undirected simple
     graph; deterministic (per-round edge hash priorities, local minima over
-    edges sharing an endpoint win)."""
+    edges sharing an endpoint win).
+
+    An edge wins iff it is the minimum ``(p, a, b)`` at both of its
+    endpoints, i.e. iff it is the per-vertex minimum of two vertices:
+    ``vmin.groupBy(m.a, m.b).count() == 2``, with no join back to the edges.
+    Self-loops are dropped first (as the DuckDB twin's ``src <> dst``); one
+    would count twice at its single vertex. Two barriers per round: the
+    winners, and the active edges, which carry the next round's priorities.
+    """
     und = graph.to_undirected(dedup=True)
+
+    def with_prio(pairs: DataFrame, rnd: int) -> DataFrame:
+        key = F.concat(F.col("a").cast("string"), F.lit("_"), F.col("b").cast("string"))
+        return pairs.select("a", "b", _prio(key, rnd).alias("p"))
+
     pairs = (
-        und.edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
+        und.edges.filter(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
+    active, rows = materialize(with_prio(pairs, 1))
     und.unpersist()
-    matched = None
-    active = pairs
+    winners_per_round: list[DataFrame] = []
     for rnd in range(1, max_rounds + 1):
-        if active.isEmpty():
+        if not rows:
             break
-        pe = active.select(
-            "a", "b",
-            _prio(F.concat(F.col("a").cast("string"), F.lit("_"),
-                           F.col("b").cast("string")), rnd).alias("p"),
-        ).localCheckpoint(eager=True)
-        # min (p, a, b) per endpoint
-        ends = pe.select(F.col("a").alias("v"), "p", "a", "b").unionByName(
-            pe.select(F.col("b").alias("v"), "p", "a", "b")
+        ends = active.select(F.col("a").alias("v"), "p", "a", "b").unionByName(
+            active.select(F.col("b").alias("v"), "p", "a", "b")
         )
-        vmin = ends.groupBy("v").agg(F.min(F.struct("p", "a", "b")).alias("m"))
         winners = (
-            pe.join(vmin.withColumnRenamed("v", "a"), "a")
-            .filter(
-                (F.col("m.p") == F.col("p"))
-                & (F.col("m.a") == F.col("a"))
-                & (F.col("m.b") == F.col("b"))
-            )
-            .drop("m")
-            .join(vmin.withColumnRenamed("v", "b"), "b")
-            .filter(
-                (F.col("m.p") == F.col("p"))
-                & (F.col("m.a") == F.col("a"))
-                & (F.col("m.b") == F.col("b"))
-            )
+            ends.groupBy("v")
+            .agg(F.min(F.struct("p", "a", "b")).alias("m"))
+            .groupBy("m.a", "m.b")
+            .count()
+            .filter(F.col("count") == 2)
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
-        matched = winners if matched is None else matched.unionByName(winners)
-        matched = matched.localCheckpoint(eager=True)
-        mv = winners.select(F.col("a").alias("v")).unionByName(
-            winners.select(F.col("b").alias("v"))
-        ).distinct()
-        active = (
-            active.join(mv.withColumnRenamed("v", "a"), "a", "left_anti")
-            .join(mv.withColumnRenamed("v", "b"), "b", "left_anti")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-    _check_maximal(active, "maximal_matching", max_rounds)
-    if matched is None:
-        matched = graph.spark.createDataFrame([], "a long, b long")
+        winners_per_round.append(winners)
+        mv = winners.select(F.explode(F.array("a", "b")).alias("v"))
+        active, rows = materialize(with_prio(
+            active.join(_small(mv.withColumnRenamed("v", "a")), "a", "left_anti")
+            .join(_small(mv.withColumnRenamed("v", "b")), "b", "left_anti"),
+            rnd + 1,
+        ))
+    _check_maximal(rows, "maximal_matching", max_rounds)
+    matched = _union_rounds(graph, winners_per_round, "a long, b long")
     return matched.select(F.col("a").alias("src"), F.col("b").alias("dst"))
 
 
@@ -181,23 +206,22 @@ def min_cover_greedy(graph: Graph, max_rounds: int = 256) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("d")
     )
     # active = uncovered with residual degree > 0 (isolated verts never join)
-    active = deg.localCheckpoint(eager=True)
+    active, rows = materialize(deg)
     winners_per_round: list[DataFrame] = []
     rounds_left = max_rounds
-    while rounds_left > 0 and not active.isEmpty():
+    while rounds_left > 0 and rows:
         rounds_left -= 1
         # nb_best(v) = lexmax (d, id) over ACTIVE neighbors — inactive
-        # uncovered neighbors have d <= 0 < v.d and can never beat (filter1)
-        a_src = active.select(F.col("id").alias("src"))
+        # uncovered neighbors have d <= 0 < v.d and can never beat (filter1);
+        # the left join below keeps active ids only, so src needs no filter
         a_dst = active.select(F.col("id").alias("dst"), F.col("d").alias("dd"))
         nb_best = (
-            edges.join(a_src, "src", "left_semi")
-            .join(a_dst, "dst")
+            edges.join(_small(a_dst), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.max(F.struct(F.col("dd"), F.col("dst"))).alias("best"))
         )
         winners = (
-            active.join(nb_best, "id", "left")
+            active.join(_small(nb_best), "id", "left")
             .filter(
                 F.col("best").isNull()
                 | (F.struct(F.col("d"), F.col("id"))
@@ -208,28 +232,23 @@ def min_cover_greedy(graph: Graph, max_rounds: int = 256) -> DataFrame:
         )
         winners_per_round.append(winners)
         cnt = (
-            edges.join(winners.withColumnRenamed("id", "src"), "src", "left_semi")
+            edges.join(_small(winners.withColumnRenamed("id", "src")), "src", "left_semi")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.count(F.lit(1)).cast("long").alias("hit"))
         )
-        active = (
-            active.join(winners, "id", "left_anti")
-            .join(cnt, "id", "left")
+        active, rows = materialize(
+            active.join(_small(winners), "id", "left_anti")
+            .join(_small(cnt), "id", "left")
             .select("id", (F.col("d") - F.coalesce("hit", F.lit(0))).alias("d"))
             .filter(F.col("d") > 0)
-            .localCheckpoint(eager=True)
         )
-    _check_maximal(active, "min_cover_greedy", max_rounds)
+    _check_maximal(rows, "min_cover_greedy", max_rounds)
     edges.unpersist()
     und.unpersist()
-    if not winners_per_round:
-        return graph.spark.createDataFrame([], "id long")
-    cover = winners_per_round[0]
-    for w in winners_per_round[1:]:
-        cover = cover.unionByName(w)
-    return cover
+    return _union_rounds(graph, winners_per_round, "id long")
 
 
+@tuned_loop
 def min_dominating_set(graph: Graph, max_rounds: int = 256) -> DataFrame:
     """(id) — a small dominating set via the reference's 2-hop-argmax greedy
     (``apps/flash/matching/min-dominating-set.h:30-95``): each round every
@@ -238,26 +257,28 @@ def min_dominating_set(graph: Graph, max_rounds: int = 256) -> DataFrame:
     vertices that are their own 2-hop argmax join the set and dominate their
     neighborhood. Deterministic.
 
-    The two propagation hops are fused into one plan (the first hop is
-    recomputed by the second — cheaper than a barrier at the ~1s/job floor),
-    so each round costs two barriers (best, active update).
+    Each round costs two barriers, one job each: ``best`` and the active
+    update, whose observed row count is the loop test. The two propagation
+    hops are fused into one plan (the second hop recomputes the first; a
+    checkpoint between them measured no faster). Each hop ends in
+    ``best ⟕ nbr`` on id, which keeps active ids only, so neither the hop's
+    messages nor ``newcnt`` semi-join their other endpoint against the
+    active set.
     """
-    P = graph.num_partitions
     und = graph.to_undirected(dedup=True)
     edges = (
         und.edges.select("src", "dst")
-        .repartition(P, "src")
+        .repartition(graph.num_partitions, "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
     # active = undominated; cnt = #undominated neighbors
-    active = (
+    active, rows = materialize(
         graph.vertices.select("id")
-        .join(deg, "id", "left")
+        .join(_small(deg), "id", "left")
         .select("id", F.coalesce("cnt", F.lit(0)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     winners_per_round: list[DataFrame] = []
     rounds_left = max_rounds
@@ -265,14 +286,13 @@ def min_dominating_set(graph: Graph, max_rounds: int = 256) -> DataFrame:
     def _propagate(best: DataFrame) -> DataFrame:
         nbr = (
             edges.join(
-                best.select(F.col("id").alias("src"), F.col("best").alias("nb")),
+                _small(best.select(F.col("id").alias("src"), F.col("best").alias("nb"))),
                 "src",
             )
-            .join(best.select(F.col("id").alias("dst")), "dst", "left_semi")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.max("nb").alias("nbmax"))
         )
-        return best.join(nbr, "id", "left").select(
+        return best.join(_small(nbr), "id", "left").select(
             "id",
             F.when(
                 F.col("nbmax").isNotNull() & (F.col("nbmax") > F.col("best")),
@@ -280,53 +300,40 @@ def min_dominating_set(graph: Graph, max_rounds: int = 256) -> DataFrame:
             ).otherwise(F.col("best")).alias("best"),
         )
 
-    from graphscope_spark.engine.tuning import iterative_loop
-
-    with iterative_loop(graph.spark, P):
-        while rounds_left > 0 and not active.isEmpty():
-            rounds_left -= 1
-            best = active.select(
-                "id",
-                F.struct(F.col("cnt"), F.col("id").alias("bid")).alias("best"),
+    while rounds_left > 0 and rows:
+        rounds_left -= 1
+        best = active.select(
+            "id",
+            F.struct(F.col("cnt"), F.col("id").alias("bid")).alias("best"),
+        )
+        # min-dominating-set.h:66-67 — local applied twice (2-hop argmax)
+        best = _propagate(_propagate(best)).localCheckpoint(eager=True)
+        winners = best.filter(F.col("id") == F.col("best.bid")).select("id")
+        winners_per_round.append(winners)
+        dominated = (
+            edges.join(
+                _small(winners.withColumnRenamed("id", "src")), "src", "left_semi"
             )
-            # min-dominating-set.h:66-67 — local applied twice (2-hop argmax)
-            best = _propagate(_propagate(best)).localCheckpoint(eager=True)
-            winners = best.filter(F.col("id") == F.col("best.bid")).select("id")
-            winners_per_round.append(winners)
-            dominated = (
-                edges.join(
-                    winners.withColumnRenamed("id", "src"), "src", "left_semi"
-                )
-                .select(F.col("dst").alias("id"))
-                .unionByName(winners)
-                .distinct()
+            .select(F.col("dst").alias("id"))
+            .unionByName(winners)
+        )
+        survivors = active.join(_small(dominated), "id", "left_anti").select("id")
+        # recompute cnt = #still-undominated neighbors (filter2/local2)
+        newcnt = (
+            edges.join(
+                _small(survivors.withColumnRenamed("id", "dst")), "dst", "left_semi"
             )
-            survivors = active.join(dominated, "id", "left_anti").select("id")
-            # recompute cnt = #still-undominated neighbors (filter2/local2)
-            newcnt = (
-                edges.join(
-                    survivors.withColumnRenamed("id", "src"), "src", "left_semi"
-                )
-                .join(
-                    survivors.withColumnRenamed("id", "dst"), "dst", "left_semi"
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            )
-            active = (
-                survivors.join(newcnt, "id", "left")
-                .select("id", F.coalesce("cnt", F.lit(0)).alias("cnt"))
-                .localCheckpoint(eager=True)
-            )
-    _check_maximal(active, "min_dominating_set", max_rounds)
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        )
+        active, rows = materialize(
+            survivors.join(_small(newcnt), "id", "left")
+            .select("id", F.coalesce("cnt", F.lit(0)).alias("cnt"))
+        )
+    _check_maximal(rows, "min_dominating_set", max_rounds)
     edges.unpersist()
     und.unpersist()
-    if not winners_per_round:
-        return graph.spark.createDataFrame([], "id long")
-    chosen = winners_per_round[0]
-    for w in winners_per_round[1:]:
-        chosen = chosen.unionByName(w)
-    return chosen
+    return _union_rounds(graph, winners_per_round, "id long")
 
 
 @tuned_loop
@@ -364,23 +371,23 @@ def min_edge_cover(graph: Graph, max_rounds: int = 256) -> DataFrame:
     # global state: proposals (id, prop) and matches (id, partner)
     props = graph.spark.createDataFrame([], "id long, prop long")
     matched = graph.spark.createDataFrame([], "id long, partner long")
-    active = deg.select("id").localCheckpoint(eager=True)  # non-isolated
+    active, rows = materialize(deg.select("id"))  # non-isolated
     rounds_left = max_rounds
-    while rounds_left > 0 and not active.isEmpty():
+    while rounds_left > 0 and rows:
         rounds_left -= 1
         unmatched_dst = (
             deg.select(F.col("id").alias("dst"), F.col("d").alias("dd"))
-            .join(matched.select(F.col("id").alias("dst")), "dst", "left_anti")
+            .join(_small(matched.select(F.col("id").alias("dst"))), "dst", "left_anti")
         )
         new_props = (
-            edges.join(active.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(unmatched_dst, "dst")
+            edges.join(_small(active.withColumnRenamed("id", "src")), "src", "left_semi")
+            .join(_small(unmatched_dst), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.min(F.struct("dd", "dst")).alias("m"))
             .select("id", F.col("m.dst").alias("prop"))
         )
         props = (
-            props.join(active, "id", "left_anti")
+            props.join(_small(active), "id", "left_anti")
             .unionByName(new_props)
             .localCheckpoint(eager=True)
         )
@@ -389,31 +396,30 @@ def min_edge_cover(graph: Graph, max_rounds: int = 256) -> DataFrame:
         mutual = (
             props.alias("x")
             .join(
-                props.alias("y"),
+                _small(props.alias("y")),
                 (F.col("x.prop") == F.col("y.id"))
                 & (F.col("y.prop") == F.col("x.id")),
             )
             .select(F.col("x.id").alias("id"), F.col("x.prop").alias("partner"))
         )
-        newly = mutual.join(matched, "id", "left_anti").localCheckpoint(eager=True)
+        newly = mutual.join(_small(matched), "id", "left_anti").localCheckpoint(eager=True)
         matched = matched.unionByName(newly).localCheckpoint(eager=True)
         touched = proposers.unionByName(newly.select("id")).distinct()
         # clear proposals aimed at touched vertices (check3): owners re-enter
-        cleared = (
-            props.join(matched.select("id"), "id", "left_anti")
-            .join(touched.withColumnRenamed("id", "prop"), "prop", "left_semi")
+        cleared, rows = materialize(
+            props.join(_small(matched.select("id")), "id", "left_anti")
+            .join(_small(touched.withColumnRenamed("id", "prop")), "prop", "left_semi")
             .select("id")
-            .localCheckpoint(eager=True)
         )
-        props = props.join(cleared, "id", "left_anti").localCheckpoint(eager=True)
+        props = props.join(_small(cleared), "id", "left_anti").localCheckpoint(eager=True)
         active = cleared
-    _check_maximal(active, "min_edge_cover", max_rounds)
+    _check_maximal(rows, "min_edge_cover", max_rounds)
     # cover the unmatched non-isolated by their min-(d, id) incident edge
-    unm = deg.select("id").join(matched.select("id"), "id", "left_anti")
+    unm = deg.select("id").join(_small(matched.select("id")), "id", "left_anti")
     fallback = (
-        edges.join(unm.withColumnRenamed("id", "src"), "src", "left_semi")
+        edges.join(_small(unm.withColumnRenamed("id", "src")), "src", "left_semi")
         .join(
-            deg.select(F.col("id").alias("dst"), F.col("d").alias("dd")), "dst"
+            _small(deg.select(F.col("id").alias("dst"), F.col("d").alias("dd"))), "dst"
         )
         .groupBy(F.col("src").alias("id"))
         .agg(F.min(F.struct("dd", "dst")).alias("m"))

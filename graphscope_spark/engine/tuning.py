@@ -21,11 +21,13 @@ import math
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 __all__ = [
     "adaptive_partitions",
     "iterative_loop",
+    "materialize",
     "plan_size_bytes",
     "tuned_loop",
 ]
@@ -81,6 +83,20 @@ def adaptive_partitions(df: DataFrame, default: int) -> int:
         return int(default)
     floor = min(8, int(default), math.ceil(est / FLOOR_BYTES))
     return max(floor, min(int(default), math.ceil(est / TARGET_BYTES)))
+
+
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` as an eager ``localCheckpoint`` leaf, plus its row count.
+
+    The count is observed (``DataFrame.observe``) on the checkpoint's own
+    job, so a loop reads its convergence test off the round's one
+    materialization instead of probing the result again with ``isEmpty()``
+    or ``count()``, each a further job and a further plan to analyse."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True
+    )
+    return out, int(obs.get["rows"])
 
 
 def tuned_loop(fn):

@@ -113,6 +113,11 @@ def _hyperplane(dim: int, table: int, bit: int, hash_fn: str = "xxhash64"):
     )
 
 
+# Bytes of the (rows, dim, planes) float64 product array of one kernel chunk:
+# 2048 rows at dim 64 × 64 planes, fewer rows for larger configurations.
+_CHUNK_BYTES = 64 << 20
+
+
 def _portable_signatures_arrow(dim: int, bits: int, tables: int):
     """Vectorized Arrow kernel for PORTABLE-mode LSH signatures (guide §4:
     heavyweight numeric kernel → pandas UDF, not per-row expressions).
@@ -127,7 +132,11 @@ def _portable_signatures_arrow(dim: int, bits: int, tables: int):
     in the same sequential left-fold order, and the sign test mirrors Spark
     semantics (NaN ≥ 0 is true; ±0.0 both set the bit). Degenerate rows
     (null vector, length ≠ dim) get the all-zero-bit signature ``t·2³²``,
-    exactly like the null-poisoned fold they would produce in the JVM.
+    exactly like the null-poisoned fold they would produce in the JVM;
+    :func:`with_lsh_signature` nulls a vector with a null element before
+    the call, since Arrow would hand that element over as NaN. Rows are
+    projected in chunks whose product array stays within
+    ``_CHUNK_BYTES``.
     """
     import numpy as np
     import pandas as pd  # noqa: F401 — resolves the UDF type hints
@@ -142,6 +151,7 @@ def _portable_signatures_arrow(dim: int, bits: int, tables: int):
             W[:, t * bits + b] = _plane_vals(dim, t, b)
     bitw = np.array([1 << b for b in range(bits)], dtype=np.int64)
     base = np.array([t << 32 for t in range(tables)], dtype=np.int64)
+    step = max(1, _CHUNK_BYTES // W.nbytes)
 
     @pandas_udf("array<long>")
     def _sig(vecs: pd.Series) -> pd.Series:
@@ -156,8 +166,8 @@ def _portable_signatures_arrow(dim: int, bits: int, tables: int):
                 res[i] = [int(x) for x in base]
         if good_rows:
             V = np.stack(good_rows)
-            for s in range(0, len(V), 2048):
-                chunk = V[s:s + 2048]
+            for s in range(0, len(V), step):
+                chunk = V[s:s + step]
                 # (rows, dim, planes): per-term products, then a cumulative
                 # sum along dim — np.cumsum is sequential accumulation, the
                 # same fold order as aggregate(..., 0.0, acc + x)
@@ -189,9 +199,9 @@ def with_lsh_signature(
     # cast would re-materialize the converted array once per projection
     # (tables×bits times per row) instead of once.
     if hash_fn == "portable":
-        return df.withColumn(
-            out, _portable_signatures_arrow(dim, bits, tables)(F.col(vec_col))
-        )
+        vec = F.col(vec_col)
+        vec = F.when(F.exists(vec, lambda x: x.isNull()), F.lit(None)).otherwise(vec)
+        return df.withColumn(out, _portable_signatures_arrow(dim, bits, tables)(vec))
     df = df.withColumn("_vd", _as_double(vec_col))
     v = F.col("_vd")
     sigs = []

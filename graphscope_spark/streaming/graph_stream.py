@@ -58,31 +58,33 @@ class StreamingWCC:
 
         from graphscope_spark.engine.ingress import wcc_delta, wcc_delta_delete
 
-        if not batch_df.take(1):
-            return
-        if "op" in batch_df.columns:
-            bad = batch_df.filter(
-                F.col("op").isNull() | ~F.col("op").isin("add", "del")
+        # one aggregation sizes the batch and validates ``op``
+        if "op" not in batch_df.columns:
+            batch_df = batch_df.withColumn("op", F.lit("add"))
+        op = F.col("op")
+        bad = op.isNull() | ~op.isin("add", "del")
+        n_add, n_del, n_bad, bad_op = batch_df.agg(
+            F.count(F.when(op == "add", 1)),
+            F.count(F.when(op == "del", 1)),
+            F.count(F.when(bad, 1)),
+            F.first(F.when(bad, op), ignorenulls=True),
+        ).collect()[0]
+        if n_bad:
+            raise ValueError(
+                "graph_stream: batch contains rows with unexpected op "
+                f"value {bad_op!r} (expected 'add'/'del') — "
+                "refusing to silently drop edges"
             )
-            sample = bad.take(1)
-            if sample:
-                raise ValueError(
-                    "graph_stream: batch contains rows with unexpected op "
-                    f"value {sample[0]['op']!r} (expected 'add'/'del') — "
-                    "refusing to silently drop edges"
-                )
-            adds = batch_df.filter(F.col("op") == "add").select("src", "dst")
-            dels = batch_df.filter(F.col("op") == "del").select("src", "dst")
-        else:
-            adds, dels = batch_df.select("src", "dst"), None
-        if adds.take(1):
-            adds = adds.localCheckpoint()
+        if not (n_add or n_del):
+            return
+        if n_add:
+            adds = batch_df.filter(op == "add").select("src", "dst").localCheckpoint()
             self.components = wcc_delta(
                 self.graph, adds, self.components
             ).localCheckpoint()
             self.graph = self.graph.add_edges(adds)
-        if dels is not None and dels.take(1):
-            dels = dels.localCheckpoint()
+        if n_del:
+            dels = batch_df.filter(op == "del").select("src", "dst").localCheckpoint()
             self.components = wcc_delta_delete(
                 self.graph, dels, self.components
             ).localCheckpoint()

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import random
 import sys
@@ -20,6 +21,27 @@ def spark():
     )
     yield sp
     sp.stop()
+
+
+_job_groups = itertools.count()
+
+
+def job_names(spark, fn):
+    """Run ``fn()`` under a job group of its own and return the names of the
+    Spark jobs it ran, read from the status store (which runs no action).
+    Broadcast builds (and, with AQE on, query-stage submissions) are the
+    jobs named after ``withThreadLocalCaptured``."""
+    sc = spark.sparkContext
+    group = f"job-names-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    return [store.job(j).name() for j in sorted(sc.statusTracker().getJobIdsForGroup(group))]
 
 
 def make_graph(spark, edges, vertices=None, num_partitions=8, weights=False):

@@ -137,10 +137,12 @@ def test_ivf_topk_recall_vs_brute_force(spark):
     assert a == b, "IVF result depends on partitioning"
 
 
-def test_portable_lsh_signature_matches_jvm_fold(spark):
+def test_portable_lsh_signature_matches_jvm_fold(spark, monkeypatch):
     """The Arrow signature kernel must be bit-exact with the JVM
     aggregate/zip_with fold it replaced (same products, same sequential
-    sum order, same sign test)."""
+    sum order, same sign test), including a vector with a null element
+    (the fold's null poisons every bit) and when the rows are projected
+    in several byte-budgeted chunks."""
     import random
 
     from pyspark.sql import functions as F
@@ -154,13 +156,22 @@ def test_portable_lsh_signature_matches_jvm_fold(spark):
     ]
     rows.append((100, [0.0] * dim))
     rows.append((101, [-1e-12] * dim))
+    rows.append((102, [0.5] * (dim - 1) + [None]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    arrow = {
-        r["vec_id"]: list(r["_sig"])
-        for r in S.with_lsh_signature(
-            df, dim, bits, tables, "embedding", hash_fn="portable"
-        ).collect()
-    }
+
+    def portable():
+        return {
+            r["vec_id"]: list(r["_sig"])
+            for r in S.with_lsh_signature(
+                df, dim, bits, tables, "embedding", hash_fn="portable"
+            ).collect()
+        }
+
+    arrow = portable()
+    assert arrow[102] == [t << 32 for t in range(tables)]
+    # 2 rows per chunk: every Arrow batch is projected in several chunks
+    monkeypatch.setattr(S, "_CHUNK_BYTES", 2 * dim * tables * bits * 8)
+    assert portable() == arrow
     dfd = df.withColumn("_vd", S._as_double("embedding"))
     v = F.col("_vd")
     sigs = []

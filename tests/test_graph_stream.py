@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import os
 
-from tests.conftest import make_graph
+import pytest
+
+from tests.conftest import job_names, make_graph
 
 
 def _write_batches(spark, base_dir, batches):
@@ -106,14 +108,39 @@ def test_streaming_wcc_mixed_ops_matches_cold(spark, tmp_path):
 
 
 def test_streaming_wcc_rejects_unknown_op(spark):
-    import pytest
-
+    """A bad ``op`` (unknown or null) raises from the batch's one validating
+    aggregation: its exchange and its result are the only jobs (AQE runs
+    the exchange as a job of its own). Separate emptiness and validity
+    ``take(1)`` probes ran 5 jobs on such a batch."""
     from graphscope_spark.streaming.graph_stream import StreamingWCC
 
     g = make_graph(spark, [(0, 1)], vertices=[0, 1])
     s = StreamingWCC(g)
-    batch = spark.createDataFrame(
-        [(0, 1, "upsert")], "src long, dst long, op string"
-    )
-    with pytest.raises(ValueError, match="unexpected op"):
-        s.process_batch(batch, 0)
+    for op in ("upsert", None):
+        batch = spark.createDataFrame(
+            [(0, 1, "add"), (1, 2, op)], "src long, dst long, op string"
+        )
+
+        def run():
+            with pytest.raises(ValueError, match=f"unexpected op value {op!r}"):
+                s.process_batch(batch, 0)
+
+        assert len(job_names(spark, run)) <= 2
+    assert s.batches_applied == 0
+
+
+def test_streaming_wcc_empty_batch_is_one_aggregation(spark):
+    """An empty batch costs the one aggregation and changes nothing (the
+    ``take(1)`` probe scanned the partitions in 3 jobs)."""
+    from graphscope_spark.streaming.graph_stream import StreamingWCC
+
+    g = make_graph(spark, [(0, 1)], vertices=[0, 1])
+    s = StreamingWCC(g)
+    before = sorted(tuple(r) for r in s.components.collect())
+    for batch in (
+        spark.createDataFrame([], "src long, dst long"),
+        spark.createDataFrame([], "src long, dst long, op string"),
+    ):
+        assert len(job_names(spark, lambda: s.process_batch(batch, 0))) <= 2
+    assert s.batches_applied == 0
+    assert sorted(tuple(r) for r in s.components.collect()) == before

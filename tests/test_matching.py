@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pytest
+
 from tests.conftest import ALL_FIXTURES, make_graph, p2p_mid
 
 
@@ -193,3 +195,48 @@ def test_maximal_matching_partition_invariant(spark):
         got[p] = {(r["src"], r["dst"]) for r in maximal_matching(g).collect()}
         g.unpersist()
     assert got[1] == got[8]
+
+
+GREEDY_LOOPS = [
+    "maximal_independent_set",
+    "maximal_matching",
+    "min_cover_greedy",
+    "min_dominating_set",
+    "min_edge_cover",
+]
+
+
+@pytest.mark.parametrize("name", GREEDY_LOOPS)
+def test_greedy_loop_fails_loud_when_rounds_run_out(spark, name):
+    """One round cannot finish this graph: the loop must raise instead of
+    returning a partial (non-maximal) result."""
+    from graphscope_spark.algorithms import matching
+
+    vertices, edges = p2p_mid(n=80, m=240, seed=5)
+    g = make_graph(spark, edges, vertices)
+    with pytest.raises(RuntimeError, match="rounds exhausted"):
+        getattr(matching, name)(g, max_rounds=1)
+    g.unpersist()
+
+
+def test_maximal_matching_never_matches_a_self_loop(spark):
+    """An undirected input skips ``to_undirected``'s self-loop filter; the
+    matching must still drop self-loops, and stay valid and maximal."""
+    from graphscope_spark.algorithms.matching import maximal_matching
+    from graphscope_spark.graph.graph import Graph
+
+    n = 30
+    edges = [(v, v) for v in range(n)] + [(v, v + 1) for v in range(n - 1)]
+    g = Graph(
+        spark.createDataFrame(edges, "src long, dst long"),
+        vertices=spark.createDataFrame([(v,) for v in range(n)], "id long"),
+        num_partitions=4,
+        directed=False,
+    )
+    m = {(r["src"], r["dst"]) for r in maximal_matching(g).collect()}
+    assert all(a != b for a, b in m), m
+    used = [v for e in m for v in e]
+    assert len(used) == len(set(used))
+    free = set(range(n)) - set(used)
+    assert not any(v in free and v + 1 in free for v in range(n - 1))
+    g.unpersist()

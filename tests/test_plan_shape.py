@@ -227,3 +227,60 @@ def test_wcc_delta_delete_plan_semi_anti_joins(spark):
         .join(touched, "component", "left_semi")
     )
     assert "LeftSemi" in _executed_plan(sub_edges)
+
+
+GREEDY_LOOPS = [
+    "maximal_independent_set",
+    "maximal_matching",
+    "min_cover_greedy",
+    "min_dominating_set",
+    "min_edge_cover",
+]
+
+
+def _greedy_graph(spark):
+    from tests.conftest import make_graph, p2p_mid
+
+    vertices, edges = p2p_mid(n=80, m=240, seed=5)
+    g = make_graph(spark, edges, vertices)
+    g.num_edges  # load the fragments outside the measured jobs
+    return g
+
+
+@pytest.mark.parametrize("name", GREEDY_LOOPS)
+def test_greedy_loop_builds_no_broadcast(spark, name):
+    """Every join in a greedy loop, set-up joins included, shuffles its
+    small side: a broadcast build is a driver collect and a ship per join
+    per round, the layer that dominated these loops."""
+    from graphscope_spark.algorithms import matching
+    from tests.conftest import job_names
+
+    g = _greedy_graph(spark)
+    names = job_names(spark, lambda: getattr(matching, name)(g).collect())
+    assert names
+    assert not [n for n in names if "withThreadLocalCaptured" in n], names
+    g.unpersist()
+
+
+@pytest.mark.parametrize("name", ["maximal_matching", "min_dominating_set"])
+def test_greedy_loop_job_budget(spark, name):
+    """Two jobs per round (the round's two checkpoints, the second also
+    observing the loop's row count), plus the initial active set and the
+    caller's collect. A probe or a broadcast would add jobs per round.
+    The round count is the smallest ``max_rounds`` that does not raise."""
+    from graphscope_spark.algorithms import matching
+    from tests.conftest import job_names
+
+    g = _greedy_graph(spark)
+    fn = getattr(matching, name)
+    for rounds in range(1, 17):
+        try:
+            names = job_names(spark, lambda: fn(g, max_rounds=rounds).collect())
+            break
+        except RuntimeError:
+            continue
+    else:
+        pytest.fail(f"{name} did not finish in 16 rounds")
+    assert rounds > 1
+    assert len(names) <= 2 * rounds + 2, (rounds, names)
+    g.unpersist()
