@@ -16,6 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from tests.test_matching import GREEDY_LOOPS
+
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -227,15 +229,6 @@ def test_wcc_delta_delete_plan_semi_anti_joins(spark):
         .join(touched, "component", "left_semi")
     )
     assert "LeftSemi" in _executed_plan(sub_edges)
-
-
-GREEDY_LOOPS = [
-    "maximal_independent_set",
-    "maximal_matching",
-    "min_cover_greedy",
-    "min_dominating_set",
-    "min_edge_cover",
-]
 
 
 def _greedy_graph(spark):
